@@ -26,7 +26,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // target environment is local[32] (one executor thread per core) —
     // session config, checksum, and median are BenchKit's single
-    // definitions, shared with CadenceSweep so "bench conditions" is a
+    // definitions, shared with the other harness mains so "bench conditions" is a
     // structural guarantee. periodicGC moved OUT of the run window
     // (30 min): sweepAll's explicit System.gc() between executions
     // already drains the cleaner queue deterministically, so the 60 s

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Block-manager lifecycle for `localCheckpoint`-pinned frames.
@@ -32,12 +33,12 @@ private[graft] object Blocks {
   /** Unpersisting a lineage-truncated checkpoint logs one WARN per RDD
     * ("cannot be recomputed after unpersisting") — in the harness mains
     * that is pure by-design noise (~100 queries' worth of deliberate
-    * releases would drown the captured output tail), so Bench/Verify/
-    * CadenceSweep/Soak call this to silence exactly that logger. It is
-    * deliberately NOT a static init: a library must not reconfigure
-    * logging as an import side effect, and in a user session the WARN is
-    * the one early signal if a future code path ever releases a frame
-    * something still reads — production keeps it. */
+    * releases would drown the captured output tail), so the harness
+    * mains (Verify and every [[BenchKit.session]]) call this to silence
+    * exactly that logger. It is deliberately NOT a static init: a library must not
+    * reconfigure logging as an import side effect, and in a user session
+    * the WARN is the one early signal if a future code path ever releases
+    * a frame something still reads — production keeps it. */
   def quietReleaseWarnings(): Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
@@ -85,10 +86,6 @@ private[graft] object Blocks {
     * harness mains are single-threaded, which this primitive assumes. */
   def pinnedCut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    // escape hatch (dev A/B probe + production fallback): pin=false
-    // makes the cut a plain AQE-governed localCheckpoint (the r14 shape)
-    if (!spark.conf.getOption("spark.graft.cut.pin").forall(_.toBoolean))
-      return df.localCheckpoint()
     val n = cutPartitions(df)
     spark.synchronized {
       val conf = spark.conf
@@ -125,26 +122,20 @@ private[graft] object Blocks {
     val spark = df.sparkSession
     val conf = spark.conf
     val target = math.max(1L,
-      conf.getOption("spark.graft.cut.partitionBytes")
-        .map(_.toLong).getOrElse(64L * 1024 * 1024))
+      bytesConf(spark, "spark.graft.cut.partitionBytes", 64L * 1024 * 1024))
     // defaultSizeInBytes is the stats value of "no idea" (Long.MaxValue
-    // unless the user lowered it) — treat anything that large as unknown.
-    // Byte confs stringify with a unit suffix ("...b"); parse the digits.
-    val unknown = BigInt(conf
-      .getOption("spark.sql.defaultSizeInBytes")
-      .map(_.takeWhile(_.isDigit)).filter(_.nonEmpty).map(_.toLong)
-      .getOrElse(Long.MaxValue))
+    // unless the user lowered it) — treat anything that large as unknown
+    val unknown = BigInt(bytesConf(spark, "spark.sql.defaultSizeInBytes", Long.MaxValue))
+    // a non-file relation (JDBC) reports defaultSizeInBytes too
+    def known(s: BigInt): BigInt = if (s >= unknown) BigInt(0) else s
     lazy val storage = spark.sparkContext.getRDDStorageInfo
     val sizes = df.queryExecution.optimizedPlan.collectLeaves().map {
       case r: LogicalRDD =>
         storage.find(_.id == r.rdd.id)
           .map(i => BigInt(i.memSize) + BigInt(i.diskSize))
           .getOrElse(BigInt(0))
-      case l: LogicalRelation =>
-        BigInt(l.relation.sizeInBytes)
-      case leaf =>
-        val s = leaf.stats.sizeInBytes
-        if (s >= unknown) BigInt(0) else s
+      case l: LogicalRelation => known(BigInt(l.relation.sizeInBytes))
+      case leaf => known(leaf.stats.sizeInBytes)
     }
     val bytes = sizes.sum
     // the floor is > 1 by default: a 1-partition pinned frame satisfies
@@ -154,11 +145,22 @@ private[graft] object Blocks {
     // citation_scc shuffle-read bytes 227 MB → 562 MB at floor 1, the
     // h1 subtree recomputed per reference)
     val floor = conf.getOption("spark.graft.cut.minPartitions")
-      .map(_.toInt).getOrElse(4).max(1)
+      .flatMap(_.trim.toIntOption).getOrElse(4).max(1)
     if (bytes <= 0) conf.get("spark.sql.shuffle.partitions").toInt
     else ((bytes + target - 1) / target)
       .min(BigInt(262144)).max(BigInt(floor)).toInt
   }
+
+  /** A byte-size conf read the way Spark reads its own: unit suffixes
+    * ("64m", "10MB") and a leading '-' (a disabled threshold) are
+    * honored, and a malformed value falls back to `default` — a conf typo
+    * must not fail every query that cuts, nor be misread in bytes. */
+  private[graft] def bytesConf(spark: SparkSession, key: String, default: Long): Long =
+    spark.conf.getOption(key).map(_.trim).flatMap { v =>
+      val neg = v.startsWith("-")
+      scala.util.Try(JavaUtils.byteStringAsBytes(if (neg) v.drop(1) else v))
+        .toOption.map(b => if (neg) -b else b)
+    }.getOrElse(default)
 
   /** Unpersist the checkpointed RDD backing `df`, if `df` is the direct
     * result of a `localCheckpoint()`/`checkpoint()` call (its analyzed

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Rounds, Tables}
 
 /** Citation analysis — the reference's entire workload, Spark-first.
   *
@@ -23,21 +23,6 @@ import graft.Tables
   */
 object Citations {
 
-  /** Default per-round probe for the iterative operators: do nothing.
-    * IterativePlanSpec injects a real probe to audit each round's UN-CUT
-    * plan — the cadence checkpoints replace lineage with a `LogicalRDD`,
-    * so the per-round join/aggregate shapes (exactly the plans that
-    * matter at 100×) are otherwise invisible to any post-hoc audit. The
-    * probe receives the round's UN-CUT `next` frame (for plan capture —
-    * planning a DataFrame is side-effect-free) plus a COUNT THUNK: where
-    * the operator already materialized the round (a checkpoint cut or a
-    * convergence count), the thunk reads those blocks — it never
-    * recomputes the round's join tree (ADVICE r10: a probe-side
-    * `df.count()` on the pre-cut frame executed every round twice,
-    * inflating the dt the tool exists to measure). Production pays one
-    * no-op call per round. */
-  val noProbe: (Int, DataFrame, () => Long) => Unit = (_, _, _) => ()
-
   /** Size-conditional probe side for a per-round join against a PINNED
     * frame (guide §3.1: broadcast the side that fits, deliberately).
     *
@@ -55,13 +40,12 @@ object Citations {
     * broadcast when `rows × bytesPerRow` is provably under the session
     * broadcast threshold, shuffle-hash otherwise. Results are identical
     * either way (same join rows; aggregate order is already
-    * plan-dependent and both engines round to the published grid). */
-  private def probeSide(df: DataFrame, rows: Long,
-                        bytesPerRow: Long = 64L): DataFrame = {
-    val threshold = df.sparkSession.conf
-      .getOption("spark.sql.autoBroadcastJoinThreshold")
-      .map(_.takeWhile(_.isDigit)).filter(_.nonEmpty).map(_.toLong)
-      .getOrElse(10L * 1024 * 1024)
+    * plan-dependent and both engines round to the published grid). A
+    * threshold ≤ 0 (broadcast disabled) never broadcasts. */
+  private[graft] def probeSide(df: DataFrame, rows: Long,
+                               bytesPerRow: Long = 64L): DataFrame = {
+    val threshold = graft.Blocks.bytesConf(df.sparkSession,
+      "spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
     if (threshold > 0 && rows * bytesPerRow < threshold) broadcast(df)
     else df.hint("shuffle_hash")
   }
@@ -289,34 +273,22 @@ object Citations {
     * lineage. Scale: per round one dedup-free degree aggregate + the
     * oriented wedge join; every exchange keys on a node id or a canonical
     * edge pair. */
-  def kTruss(edges: DataFrame, k: Int = 3, rounds: Int = 6,
-             roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = edges.where(col("src") =!= col("dst"))
+    val e0 = edges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
       .pinnedCut
-    var lastCut = e
-    var prevEdges = e.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      i += 1
-      val next = edgeSupport(e)
+    val (e, _) = Rounds.run("kTruss", rounds, (e0, e0.count()),
+        converge = true, owned = Seq(e0)) { case (r, (e, prev)) =>
+      val cut = r.cut(edgeSupport(e)
         .where(col("support") >= k - 2)
-        .select(col("a"), col("b"))
-      val cut = next.localCheckpoint() // eager — materialized before release
+        .select(col("a"), col("b")))
       val n = cut.count() // checkpoint scan; = edge-set equality (monotone)
-      roundProbe(i, next, () => n)
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      e = cut
-      converged = n == prevEdges
-      prevEdges = n
+      if (n == prev) r.stop()
+      (cut, n)
     }
-    if (!converged) throw new IllegalStateException(
-      s"kTruss did not converge in $rounds peel rounds; raise the cap")
     edgeSupport(e)
   }
 
@@ -367,27 +339,22 @@ object Citations {
       .repartition(col("src")).pinnedCut
     val nodes = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
-    var balls = nodes.groupBy(col("id"))
+    val init = nodes.groupBy(col("id"))
       .agg(hll_sketch_agg(col("id"), lit(lgK)).as("ball"))
       .localCheckpoint()
-    perHop(0, balls)
-    var lastCut = balls
-    for (h <- 1 to hops) {
+    val balls = Rounds.run("hyperBall", hops, init, owned = Seq(init)) { (r, balls) =>
+      perHop(r.i - 1, balls)
       val inbox = e
         .join(balls.select(col("id").as("u"), col("ball").as("nb"))
           .hint("shuffle_hash"), e("src") === col("u"))
         .groupBy(e("dst").as("id"))
         .agg(hll_union_agg(col("nb")).as("nb"))
-      val next = balls.join(inbox, Seq("id"), "left_outer")
+      r.cut(balls.join(inbox, Seq("id"), "left_outer")
         .select(balls("id"),
           when(col("nb").isNull, col("ball"))
-            .otherwise(hll_union(col("ball"), col("nb"))).as("ball"))
-      val cut = next.localCheckpoint() // eager — materialized pre-release
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      balls = cut
-      perHop(h, balls)
+            .otherwise(hll_union(col("ball"), col("nb"))).as("ball")))
     }
+    perHop(hops, balls)
     graft.Blocks.release(e)
     balls
   }
@@ -854,36 +821,17 @@ object Citations {
     * engines); invariants are spec-tested in AnalyticsExtraSpec, values
     * pinned by a closed-form fixture. */
   def pageRank(edges: DataFrame, iterations: Int = 10,
-               damping: Double = 0.85, checkpointEvery: Int = 3,
-               roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+               damping: Double = 0.85): DataFrame = {
     // Static sides pinned once: without the eager checkpoints every
     // round's materialization would re-run the ENTIRE lineage back to the
     // scan, turning O(iters) work into O(iters²).
-    //
-    // checkpointEvery trades job-launch overhead against recompute: each
-    // un-checkpointed round's plan references the previous ranks TWICE
-    // (dangling scan + contribs join), so chaining k rounds between cuts
-    // re-executes the oldest round up to 2^(k-1) times inside one job —
-    // but saves k-1 materialization jobs. Measured under BENCH conditions
-    // (graft.CadenceSweep: local[32], sf0.1, checksum materialization,
-    // median of 3 after an untimed warm-up, two independent JVMs — table
-    // in BASELINE.md): every-round ~9.7-10.8 s, every-2/3/4 all ~8-9 s
-    // and statistically indistinguishable from each other. So the real,
-    // reproducible effect is "any cadence >= 2 beats every-round by
-    // ~15-20%"; finer distinctions are inside run-to-run noise (earlier
-    // standalone measurements suggesting every-3 ~4.9 s did not survive
-    // bench conditions and are superseded by the sweep). Results are
-    // bit-identical for any cadence (checkpointing changes WHERE the
-    // plan is cut, never the arithmetic) — probe-verified, and the hash
-    // oracle pins it. The final round always cuts, keeping the returned
-    // plan bounded.
     // plain (AQE-governed) cuts, NOT pinnedCut: pageRank's per-round
     // stages do real compute (the contribs join + aggregate over the
     // full edge frame), and AQE's per-stage widths (wide maps, coalesced
     // reads) beat any single pinned width at the measured scale — r16
     // A/B at sf0.1: pinned floor-4 9.92 s / floor-8 9.73 / r15's 32-wide
     // 17.16 vs 5.92 s for this shape (the pin also adds ~5 AQE query
-    // stages per round: 129 vs 76 stages per execution, PrProbe). The
+    // stages per round: 129 vs 76 stages per execution). The
     // at-scale trade is the per-round edge re-exchange this re-admits —
     // but that exchange is AQE-sized and the measured ground truth says
     // the pin costs ~70% wall here; see OPTIMIZATION_r16.md.
@@ -897,14 +845,10 @@ object Citations {
     // checkpointed frame (no join)
     val nodesWithDeg = nodes.join(outDeg, Seq("id"), "left_outer")
       .localCheckpoint()
-    var ranks = nodesWithDeg.select(col("id"), col("deg"),
+    val init = nodesWithDeg.select(col("id"), col("deg"),
       lit(1.0 / n).as("rank")).localCheckpoint()
-    // the previous cut's blocks are dead the moment the next cut has
-    // materialized — release them then, so the loop's block-manager
-    // footprint is O(one rank frame), not O(iterations / cadence)
-    // frames (graft.Blocks has the leak numbers)
-    var lastCut = ranks
-    for (i <- 1 to iterations) {
+    val ranks = Rounds.run("pageRank", iterations, init, every = rankCadence,
+        owned = Seq(init)) { (r, ranks) =>
       // dangling mass as a broadcast scalar FRAME, not a driver collect:
       // folding it into the round's plan keeps each round a single job
       val dangling = broadcast(ranks.where(col("deg").isNull)
@@ -919,20 +863,13 @@ object Citations {
           rows = n.toLong),
           e("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("share")).as("inbox"))
-      val next = nodesWithDeg
+      r.cut(nodesWithDeg
         .join(contribs, nodesWithDeg("id") === contribs("dst"), "left_outer")
         .crossJoin(dangling)
         .select(nodesWithDeg("id"), nodesWithDeg("deg"),
           (lit((1 - damping) / n) +
             lit(damping) * (coalesce(col("inbox"), lit(0.0)) +
-              col("dm") / lit(n))).as("rank"))
-      roundProbe(i, next, () => next.count())
-      ranks = if (i % checkpointEvery == 0 || i == iterations) {
-        val cut = next.localCheckpoint() // eager: materialized before the release below
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        cut
-      } else next
+              col("dm") / lit(n))).as("rank")))
     }
     // the final cut is a lineage-free LogicalRDD — the returned frame no
     // longer references the edge / degree frames, so their blocks go too
@@ -940,6 +877,17 @@ object Citations {
     graft.Blocks.release(nodesWithDeg)
     ranks.select(col("id").as("paper_id"), round(col("rank"), 8).as("rank"))
   }
+
+  /** Lineage-cut cadence of [[pageRank]] and [[personalizedPageRank]].
+    * Chaining k rounds between cuts re-executes the oldest round up to
+    * 2^(k-1) times inside one job (a round references the previous ranks
+    * twice: dangling scan + contribs join) but saves k-1 materialization
+    * jobs. Measured under bench conditions (local[32], sf0.1, median of
+    * 3 after warm-up, two JVMs — table in BASELINE.md): every round
+    * ~9.7-10.8 s, every 2/3/4 all ~8-9 s and indistinguishable. Results
+    * are bit-identical for any cadence (a cut changes where the plan is
+    * cut, never the arithmetic); the final round always cuts. */
+  private val rankCadence = 3
 
   /** Personalized PageRank (topic-sensitive PageRank — Haveliwala, WWW
     * 2002): the teleport vector concentrates on a SEED set instead of
@@ -956,9 +904,7 @@ object Citations {
     * frame, shuffle_hash on the node-scale rank side, cadence-3 cuts
     * with immediate release. */
   def personalizedPageRank(edges: DataFrame, seedK: Int = 5,
-                           iterations: Int = 6, damping: Double = 0.85,
-                           checkpointEvery: Int = 3,
-                           roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+                           iterations: Int = 6, damping: Double = 0.85): DataFrame = {
     // plain AQE cut, not pinnedCut — the pageRank rationale above
     // (measured at sf0.1: pinned 6.85-7.72 s vs 5.05 s for this shape)
     val e = edges.repartition(col("src")).localCheckpoint()
@@ -975,10 +921,10 @@ object Citations {
       .select(col("id"), col("deg"), coalesce(col("s"), lit(0.0)).as("s"))
       .localCheckpoint()
     val n = base.count() // node count: probeSide sizing (persisted scan)
-    var ranks = base.select(col("id"), col("deg"), col("s"),
+    val init = base.select(col("id"), col("deg"), col("s"),
       col("s").as("rank")).localCheckpoint()
-    var lastCut = ranks
-    for (i <- 1 to iterations) {
+    val ranks = Rounds.run("personalizedPageRank", iterations, init,
+        every = rankCadence, owned = Seq(init)) { (r, ranks) =>
       val dangling = broadcast(ranks.where(col("deg").isNull)
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm")))
       val contribs = e
@@ -987,20 +933,13 @@ object Citations {
           rows = n),
           e("src") === col("id"))
         .groupBy(col("dst")).agg(sum(col("share")).as("inbox"))
-      val next = base
+      r.cut(base
         .join(contribs, base("id") === contribs("dst"), "left_outer")
         .crossJoin(dangling)
         .select(base("id"), base("deg"), base("s"),
           (lit(1 - damping) * col("s") +
             lit(damping) * (coalesce(col("inbox"), lit(0.0)) +
-              col("dm") * col("s"))).as("rank"))
-      roundProbe(i, next, () => next.count())
-      ranks = if (i % checkpointEvery == 0 || i == iterations) {
-        val cut = next.localCheckpoint() // eager — materialized before release
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        cut
-      } else next
+              col("dm") * col("s"))).as("rank")))
     }
     graft.Blocks.release(e)
     graft.Blocks.release(base)
@@ -1122,38 +1061,26 @@ object Citations {
     * SHRINKS every round and both joins key on it, so sort-merge
     * amortizes one sort of the surviving frame while SHJ re-hashes both
     * sides every round. */
-  def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8,
-            roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
-    val und = edges.where(col("src") =!= col("dst"))
+  def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8): DataFrame = {
+    val e0 = edges.where(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    var e = und.pinnedCut
-    var lastCut = e
-    var prevEdges = e.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < rounds) {
-      i += 1
+      .pinnedCut
+    val (e, _) = Rounds.run("kCore", rounds, (e0, e0.count()),
+        converge = true, owned = Seq(e0)) { case (r, (e, prev)) =>
       val ok = e.select(col("a").as("node"))
         .unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k)
         .select(col("node"))
-      val next = e
+      val cut = r.cut(e
         .join(ok.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(ok.select(col("node").as("b")), Seq("b"), "left_semi")
-      val cut = next.localCheckpoint() // eager — materialized before release
+        .join(ok.select(col("node").as("b")), Seq("b"), "left_semi"))
       val n = cut.count() // checkpoint scan; = edge set equality (see doc)
-      roundProbe(i, next, () => n)
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      e = cut
-      converged = n == prevEdges
-      prevEdges = n
+      if (n == prev) r.stop()
+      (cut, n)
     }
-    if (!converged) throw new IllegalStateException(
-      s"kCore did not converge in $rounds peel rounds; raise the cap")
     e.select(col("a").as("paper_id")).unionAll(e.select(col("b").as("paper_id")))
       .groupBy(col("paper_id")).agg(count(lit(1)).as("core_deg"))
   }
@@ -1238,44 +1165,35 @@ object Citations {
     *    (on dst, aliased id) matches the NEXT half-step's join key, so
     *    steady-state each half-step shuffles exactly once (the message
     *    aggregate no HITS formulation avoids). */
-  def hits(edges: DataFrame, iterations: Int = 6,
-           roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int = 6): DataFrame = {
     require(iterations >= 1, "hits needs at least one iteration")
     val eSrc = edges.repartition(col("src")).pinnedCut
     val eDst = eSrc.repartition(col("dst")).pinnedCut
     val nodes = eSrc.select(col("src").as("id"))
       .union(eSrc.select(col("dst").as("id"))).distinct().pinnedCut
-    // round 0: hub = 1.0 on every node (dense by definition)
-    var hub = nodes.select(col("id"), lit(1.0).as("hub"))
-    var auth: DataFrame = null
-    var lastACut: DataFrame = null
-    var lastHCut: DataFrame = null
-    for (i <- 1 to iterations) {
+    // round 0: hub = 1.0 on every node (dense by definition); auth is
+    // first written by round 1 (iterations >= 1)
+    val (auth, hub) = Rounds.run("hits", iterations,
+        (null: DataFrame, nodes.select(col("id"), lit(1.0).as("hub")))) {
+        case (r, (_, hub)) =>
       // authority half-step: araw = Σ hub over in-edges (sparse: nodes
       // without in-edges are simply absent — they are exact zeros)
       // shuffle_hash on the score side: hash-building the node-scale
       // score frame beats re-sorting the edge-scale side every half-step
       // (SMJ would sort 600k+ edges 2×/round; the hash build is O(nodes))
-      val araw = eSrc.join(hub.hint("shuffle_hash"), eSrc("src") === hub("id"))
-        .groupBy(eSrc("dst").as("id")).agg(sum(col("hub")).as("araw"))
-      val aCut = araw.localCheckpoint() // eager — materialized before release
-      roundProbe(i, araw, () => aCut.count())
-      if (lastACut != null) graft.Blocks.release(lastACut)
-      lastACut = aCut
+      val aCut = r.cut(eSrc.join(hub.hint("shuffle_hash"), eSrc("src") === hub("id"))
+        .groupBy(eSrc("dst").as("id")).agg(sum(col("hub")).as("araw")))
       val anorm = broadcast(
         aCut.agg(sqrt(sum(col("araw") * col("araw"))).as("anorm")))
-      auth = aCut.crossJoin(anorm)
+      val auth = aCut.crossJoin(anorm)
         .select(col("id"), (col("araw") / col("anorm")).as("auth"))
       // hub half-step: hraw = Σ auth over out-edges, same shape transposed
-      val hraw = eDst.join(auth.hint("shuffle_hash"), eDst("dst") === auth("id"))
-        .groupBy(eDst("src").as("id")).agg(sum(col("auth")).as("hraw"))
-      val hCut = hraw.localCheckpoint()
-      if (lastHCut != null) graft.Blocks.release(lastHCut)
-      lastHCut = hCut
+      val hCut = r.cut(eDst.join(auth.hint("shuffle_hash"), eDst("dst") === auth("id"))
+        .groupBy(eDst("src").as("id")).agg(sum(col("auth")).as("hraw")))
       val hnorm = broadcast(
         hCut.agg(sqrt(sum(col("hraw") * col("hraw"))).as("hnorm")))
-      hub = hCut.crossJoin(hnorm)
-        .select(col("id"), (col("hraw") / col("hnorm")).as("hub"))
+      (auth, hCut.crossJoin(hnorm)
+        .select(col("id"), (col("hraw") / col("hnorm")).as("hub")))
     }
     graft.Blocks.release(eSrc)
     graft.Blocks.release(eDst)
@@ -1364,8 +1282,7 @@ object Citations {
     * pinned partitioning; labels are cut once per round with superseded
     * cuts released immediately; the edge frame is released after the
     * loop (the returned frame reads only the final cut). */
-  def components(edges: DataFrame, rounds: Int = 10,
-                 roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def components(edges: DataFrame, rounds: Int = 10): DataFrame = {
     // both directions: a node hears the labels of every neighbor
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
@@ -1373,32 +1290,21 @@ object Citations {
         .select(col("dst").as("u"), col("src").as("v")))
       .repartition(col("u")).pinnedCut
     // und is partitioned on u, so the node-id distinct needs no exchange
-    var labels = und.select(col("u").as("id")).distinct()
+    val init = und.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label")).pinnedCut
-    var converged = false
-    var i = 0
-    // release() is deliberately a no-op on DERIVED frames, so track the
-    // raw checkpoint (labels is its chg-pruning projection)
-    var lastCut = labels
-    while (!converged && i < rounds) {
-      i += 1
+    // the state is the raw cut (release() is a no-op on DERIVED frames);
+    // each round reads its (id, label) projection, dropping the chg flag
+    val labels = try Rounds.run("components", rounds, init, converge = true,
+        owned = Seq(init)) { (r, cut) =>
+      val labels = cut.select(col("id"), col("label"))
       val msg = und.join(labels.hint("shuffle_hash"), und("u") === labels("id"))
         .groupBy(und("v").as("id")).agg(min(col("label")).as("ml"))
-      val next = labels.join(msg, Seq("id"))
+      val next = r.cut(labels.join(msg, Seq("id"))
         .select(col("id"), least(col("label"), col("ml")).as("label"),
-          (col("ml") < col("label")).as("chg"))
-      val cut = next.localCheckpoint() // eager — materialized before release
-      val changed = cut.where(col("chg")).count() // checkpoint scan, no join
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      labels = cut.select(col("id"), col("label"))
-      converged = changed == 0
-    }
-    graft.Blocks.release(und) // the returned frame reads only the final cut
-    if (!converged) throw new IllegalStateException(
-      s"components did not converge in $rounds rounds " +
-        "(graph diameter exceeds the cap); raise it")
+          (col("ml") < col("label")).as("chg")))
+      if (next.where(col("chg")).count() == 0) r.stop() // checkpoint scan, no join
+      next
+    } finally graft.Blocks.release(und) // the result reads only the final cut
     labels.select(col("id").as("paper_id"), col("label").as("component"))
   }
 
@@ -1478,8 +1384,7 @@ object Citations {
     * hops (h1 = frontier's neighbors, h2 = their neighbors), so the
     * traversal explores up to `2 × rounds` hops — the default of 16
     * keeps the hop budget at 32. */
-  def sccPivot(edges: DataFrame, rounds: Int = 16,
-               roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def sccPivot(edges: DataFrame, rounds: Int = 16): DataFrame = {
     val raw = edges.where(col("src") =!= col("dst"))
     // traversal parallelism: every per-round stage inherits the pinned
     // e2 side's width, so the cut's size-aware partition count (bytes /
@@ -1508,12 +1413,8 @@ object Citations {
     val seed = pivot
       .select(explode(array(concat(lit("F:"), col("id")),
         concat(lit("B:"), col("id")))).as("id")).localCheckpoint()
-    var visited = seed
-    var frontier = seed
-    var i = 0
-    var done = false
-    while (!done && i < rounds) {
-      i += 1
+    val (visited, frontier) = Rounds.run("sccPivot", rounds, (seed, seed),
+        converge = true) { case (r, (visited, frontier)) =>
       // TWO hops per round: at sf0.1 the per-round cost is flat
       // (~1 s whether the frontier is 8 or 54k rows — pure stage
       // overhead), so the round count, not data volume, is the bill;
@@ -1525,25 +1426,15 @@ object Citations {
         .select(col("t").as("id")).distinct()
       val h2 = e2.join(h1.hint("shuffle_hash"), e2("k") === h1("id"))
         .select(col("t").as("id"))
-      val nxt = h1.unionByName(h2).distinct()
-        .join(visited, Seq("id"), "left_anti")
-      val cutN = nxt.localCheckpoint()
-      val n = cutN.count()
-      roundProbe(i, nxt, () => n)
-      if (n == 0) {
-        graft.Blocks.release(cutN)
-        done = true
-      } else {
-        val grown = visited.union(cutN).localCheckpoint()
-        if (visited ne seed) graft.Blocks.release(visited)
-        if (frontier ne seed) graft.Blocks.release(frontier)
-        visited = grown
-        frontier = cutN
-      }
+      val cutN = r.cut(h1.unionByName(h2).distinct()
+        .join(visited, Seq("id"), "left_anti"))
+      if (cutN.count() == 0) {
+        // the natural empty-frontier fixpoint: the state stays as it was
+        r.drop(cutN)
+        r.stop()
+        (visited, frontier)
+      } else (r.cut(visited.union(cutN)), cutN)
     }
-    if (!done) throw new IllegalStateException(
-      s"reach closure did not converge in $rounds double-hop rounds " +
-        s"(${2 * rounds} hops); raise the cap")
     val fwd = visited.where(col("id").startsWith("F:"))
       .select(substring(col("id"), 3, Int.MaxValue).as("id"))
     val bwd = visited.where(col("id").startsWith("B:"))
@@ -1553,10 +1444,7 @@ object Citations {
     val scc = fwd.join(bwd, Seq("id"), "left_semi")
       .select(col("id").as("paper_id"))
       .localCheckpoint()
-    graft.Blocks.release(e2)
-    if (visited ne seed) graft.Blocks.release(visited)
-    if (frontier ne seed) graft.Blocks.release(frontier)
-    graft.Blocks.release(seed)
+    Seq(e2, visited, frontier, seed).distinct.foreach(graft.Blocks.release)
     scc
   }
 
@@ -1622,8 +1510,7 @@ object Citations {
     * 100 TB the trim typically removes the vast majority of nodes
     * (power-law corpora are mostly acyclic tendrils), so the expensive
     * closure runs on the small cyclic core. */
-  def sccAll(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2,
-             roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def sccAll(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2): DataFrame = {
     // same width rule as sccPivot: the cut sizes its own partition count
     // from real input bytes (Blocks.cutPartitions) — per-trim-round
     // stages are overhead-bound at sf0.1, edge-proportional at 100 TB
@@ -1632,37 +1519,28 @@ object Citations {
     val nodes = e0.select(col("src").as("id"))
       .unionByName(e0.select(col("dst").as("id"))).distinct()
       .localCheckpoint()
-    var probeRound = 0
     var rem = e0
     var edgesLeft = rem.count()
     var sccFrames: List[DataFrame] = Nil // (paper_id, scc_id, scc_size)
     var outer = 0
+    // explicit, not Rounds: each extraction nests two Rounds loops (trim,
+    // sccPivot) and ends on the trim's fixpoint as well as the cut's count
     while (edgesLeft > 0 && outer < pivotRounds) {
       outer += 1
-      // trim to the directed core (bounded fixpoint, kCore discipline)
-      var e = rem
-      var prev = edgesLeft
-      var conv = false
-      var t = 0
-      while (!conv && t < trimRounds) {
-        t += 1
+      // trim to the directed core (bounded fixpoint, kCore discipline);
+      // rem stays owned by this loop, the trim owns only its own cuts
+      val (e, prev) = Rounds.run("sccAll trim", trimRounds, (rem, edgesLeft),
+          converge = true) { case (r, (e, prev)) =>
         val keep = e.select(col("src").as("n")).distinct()
           .join(e.select(col("dst").as("n")).distinct(), Seq("n"), "left_semi")
-        val nxt = e
+        val cut = r.cut(e
           .join(keep.select(col("n").as("src")), Seq("src"), "left_semi")
           .join(keep.select(col("n").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-        val cut = nxt.localCheckpoint() // eager — materialized before release
+          .select(col("src"), col("dst")))
         val n = cut.count()
-        probeRound += 1
-        roundProbe(probeRound, nxt, () => n)
-        if ((e ne e0) && (e ne rem)) graft.Blocks.release(e)
-        e = cut
-        conv = n == prev
-        prev = n
+        if (n == prev) r.stop()
+        (cut, n)
       }
-      if (!conv) throw new IllegalStateException(
-        s"sccAll: trim did not reach its fixpoint in $trimRounds rounds; raise the cap")
       if (prev == 0) {
         // the residual is acyclic — everything left is singletons
         if (e ne e0) graft.Blocks.release(e)
@@ -1678,8 +1556,6 @@ object Citations {
           .select(col("src"), col("dst"))
           .localCheckpoint()
         edgesLeft = remNxt.count()
-        probeRound += 1
-        roundProbe(probeRound, remNxt, () => edgesLeft)
         if (e ne e0) graft.Blocks.release(e)
         if (rem ne e0) graft.Blocks.release(rem)
         rem = remNxt
@@ -1870,17 +1746,15 @@ object Citations {
     * value is the per-round sum scalar. Superseded level cuts are
     * released in-loop, so peak footprint is O(one iterate). */
   def sccLayers(edges: DataFrame, trimRounds: Int = 10, pivotRounds: Int = 2,
-                levelRounds: Int = 12,
-                roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame =
+                levelRounds: Int = 12): DataFrame =
     sccLayersFrom(edges, sccAll(edges, trimRounds, pivotRounds).localCheckpoint(),
-      levelRounds, roundProbe, releaseLabels = true)
+      levelRounds, releaseLabels = true)
 
   /** [[sccLayers]] over a PRE-COMPUTED labeling (see
     * [[sccCondensationFrom]]); `releaseLabels` stays false for cached
     * label frames — the cache owns their lifecycle, not this consumer. */
   def sccLayersFrom(edges: DataFrame, labels: DataFrame,
                     levelRounds: Int = 12,
-                    roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe,
                     releaseLabels: Boolean = false): DataFrame = {
     // same width rule as sccPivot: condensation frames are ≤ node-sized,
     // so per-round stages are overhead-bound — the cut sizes its width
@@ -1898,38 +1772,27 @@ object Citations {
     val sccs = labels.select(col("scc_id"), col("scc_size")).distinct()
       .pinnedCut
     if (releaseLabels) graft.Blocks.release(labels)
-    var levels = sccs.select(col("scc_id"), lit(0L).as("level")).localCheckpoint()
-    var prevSum = 0L
-    var done = false
-    var i = 0
-    while (!done && i < levelRounds) {
-      i += 1
+    val init = sccs.select(col("scc_id"), lit(0L).as("level")).localCheckpoint()
+    // the condensation is acyclic, so the fixpoint is the DAG's max level
+    val (levels, _) = Rounds.run("sccLayers", levelRounds, (init, 0L),
+        converge = true, owned = Seq(init)) { case (r, (levels, prevSum)) =>
       val cand = ce.join(levels.hint("shuffle_hash"),
           ce("src_scc") === levels("scc_id"))
         .select(col("dst_scc").as("scc_id"), (col("level") + 1).as("lvl"))
         .groupBy(col("scc_id")).agg(max(col("lvl")).as("lvl"))
-      val next = levels.select(col("scc_id"), col("level"))
+      val cut = r.cut(levels.select(col("scc_id"), col("level"))
         .join(cand, Seq("scc_id"), "left_outer")
         .select(col("scc_id"),
-          greatest(col("level"), coalesce(col("lvl"), lit(0L))).as("level"))
-      val cut = next.localCheckpoint()
+          greatest(col("level"), coalesce(col("lvl"), lit(0L))).as("level")))
       val s = cut.agg(coalesce(sum(col("level")), lit(0L)))
         .collect()(0).getLong(0)
-      roundProbe(i, next, () => s)
-      graft.Blocks.release(levels)
-      levels = cut
-      if (s == prevSum) done = true else prevSum = s
+      if (s == prevSum) r.stop()
+      (cut, s)
     }
-    if (!done) throw new IllegalStateException(
-      s"sccLayers: level propagation did not converge in $levelRounds rounds; " +
-        "raise the cap (the condensation is acyclic, so the fixpoint is the " +
-        "DAG's max level)")
     val out = sccs.join(levels, Seq("scc_id"))
       .select(col("scc_id"), col("scc_size"), col("level"))
       .localCheckpoint()
-    graft.Blocks.release(ce)
-    graft.Blocks.release(sccs)
-    graft.Blocks.release(levels)
+    Seq(ce, sccs, levels).foreach(graft.Blocks.release)
     out
   }
 
@@ -1992,18 +1855,16 @@ object Citations {
     * edge partitioning + two partial-aggregable counts ((v,label) then
     * v) — no windows, no cartesians; labels cut per round with
     * superseded cuts released ([[components]] lifecycle). */
-  def lpa(edges: DataFrame, rounds: Int = 4,
-          roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def lpa(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .union(edges.where(col("src") =!= col("dst"))
         .select(col("dst").as("u"), col("src").as("v")))
       .distinct()
       .repartition(col("u")).pinnedCut
-    var labels = und.select(col("u").as("id")).distinct()
+    val init = und.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("label")).pinnedCut
-    var lastCut = labels
-    for (i <- 1 to rounds) {
+    val labels = Rounds.run("lpa", rounds, init, owned = Seq(init)) { (r, labels) =>
       // ONE exchange feeds both aggregates: repartition on the message key
       // v, under which hashpartitioning(v) satisfies the (v,label) AND the
       // (v) clustering requirements — both groupBys run partition-local
@@ -2020,14 +1881,9 @@ object Citations {
         .agg(min(concat(
           lpad((lit(999999999999L) - col("cnt")).cast("string"), 12, "0"),
           col("label"))).as("key"))
-      val next = labels.join(msg, Seq("id"), "left_outer")
+      r.cut(labels.join(msg, Seq("id"), "left_outer")
         .select(col("id"),
-          coalesce(expr("substring(key, 13)"), col("label")).as("label"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      labels = cut
+          coalesce(expr("substring(key, 13)"), col("label")).as("label")))
     }
     graft.Blocks.release(und)
     labels.select(col("id").as("paper_id"), col("label").as("community"))
@@ -2097,30 +1953,30 @@ object Citations {
     * round, nothing quadratic, no driver loop over data — the decided
     * cuts are unioned lazily at the end, ≤rounds frames of disjoint
     * nodes). */
-  def mis(edges: DataFrame, rounds: Int = 12,
-          roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def mis(edges: DataFrame, rounds: Int = 12): DataFrame = {
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
       .union(edges.where(col("src") =!= col("dst"))
         .select(col("dst").as("u"), col("src").as("v")))
       .distinct()
-    var e = und.repartition(col("u")).pinnedCut
-    var alive = e.select(col("u").as("id")).distinct().pinnedCut
+    val e0 = und.repartition(col("u")).pinnedCut
+    val alive0 = e0.select(col("u").as("id")).distinct().pinnedCut
     // the LCG priority hashes THROUGH a BIGINT cast; a non-numeric id
     // would cast to NULL and null-poison its key, silently starving the
     // node of wins — fail loudly instead (the count scans blocks the
     // loop materialized anyway)
-    val nonNumeric = alive.where(col("id").cast("long").isNull).count()
+    val nonNumeric = alive0.where(col("id").cast("long").isNull).count()
     require(nonNumeric == 0,
       s"mis requires numeric node ids ($nonNumeric non-numeric); " +
         "the per-round LCG priority casts ids to BIGINT")
-    var lastE = e
-    var lastAlive = alive
+    // the decided cuts are the result: kept, never superseded
     val decidedCuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var remaining = alive.count()
-    var i = 0
-    while (remaining > 0 && i < rounds) {
-      i += 1
+    // an empty graph has nothing to decide: no round runs
+    val (alive, e) =
+      if (alive0.count() == 0) (alive0, e0)
+      else Rounds.run("mis", rounds, (alive0, e0), converge = true,
+          owned = Seq(alive0, e0)) { case (r, (alive, e)) =>
+      val i = r.i
       val keyed = alive.select(col("id"), concat(
         lpad(((pmod(col("id").cast("long"), lit(99991L)) * lit(40503L)
           + lit(i * 7919L)) % lit(99991L)).cast("string"), 6, "0"),
@@ -2135,33 +1991,22 @@ object Citations {
       // winners' neighborhoods leave the graph on the losing side
       val out = e.join(winners.select(col("id").as("u")), Seq("u"), "left_semi")
         .select(col("v").as("id")).distinct()
-      val cut = winners
+      val cut = r.keep(winners
         .select(col("id"), lit(true).as("in_mis"), lit(i).as("round"))
         .unionAll(out.select(col("id"), lit(false).as("in_mis"),
-          lit(i).as("round")))
-        .localCheckpoint()
+          lit(i).as("round"))))
       decidedCuts += cut
       val gone = cut.select(col("id"))
-      val nextAlive = alive.join(gone, Seq("id"), "left_anti")
-      val nextE = e
+      val aliveCut = r.cut(alive.join(gone, Seq("id"), "left_anti"))
+      val eCut = r.cut(e
         .join(gone.select(col("id").as("u")), Seq("u"), "left_anti")
         .join(gone.select(col("id").as("v")), Seq("v"), "left_anti")
-        .select(col("u"), col("v"))
-      val aliveCut = nextAlive.localCheckpoint()
-      val eCut = nextE.localCheckpoint()
-      remaining = aliveCut.count()
-      roundProbe(i, winners, () => cut.count())
-      graft.Blocks.release(lastAlive)
-      graft.Blocks.release(lastE)
-      lastAlive = aliveCut
-      lastE = eCut
-      alive = aliveCut
-      e = eCut
+        .select(col("u"), col("v")))
+      if (aliveCut.count() == 0) r.stop()
+      (aliveCut, eCut)
     }
-    graft.Blocks.release(lastAlive)
-    graft.Blocks.release(lastE)
-    if (remaining > 0) throw new IllegalStateException(
-      s"mis did not decide every node in $rounds rounds; raise the cap")
+    graft.Blocks.release(alive)
+    graft.Blocks.release(e)
     if (decidedCuts.isEmpty) // empty graph: zero decisions, schema intact
       und.select(col("u").as("paper_id"), lit(true).as("in_mis"),
         lit(0).as("round")).limit(0)
@@ -2405,9 +2250,8 @@ object Citations {
     * aggregable (id,c) counts) plus two bounded side frames — Σtot is
     * ≤|communities| rows and deg is the pinned ≤|V| frame — joined on
     * the candidate key; labels cut per round, superseded cuts released. */
-  def louvain(edges: DataFrame, rounds: Int = 4,
-              roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
-    val (labels, und, deg) = louvainCore(edges, rounds, roundProbe)
+  def louvain(edges: DataFrame, rounds: Int = 4): DataFrame = {
+    val (labels, und, deg) = louvainCore(edges, rounds)
     graft.Blocks.release(und)
     graft.Blocks.release(deg)
     labels.select(col("id").as("paper_id"), col("label").as("community"))
@@ -2416,8 +2260,7 @@ object Citations {
   /** Shared core: returns (labels, und, deg) with `und`/`deg` still
     * pinned — [[louvain]] releases them; [[louvainStats]] consumes them
     * first. `labels` is an eager localCheckpoint, safe past release. */
-  private def louvainCore(edges: DataFrame, rounds: Int,
-                          roundProbe: (Int, DataFrame, () => Long) => Unit)
+  private def louvainCore(edges: DataFrame, rounds: Int)
   : (DataFrame, DataFrame, DataFrame) = {
     val und = edges.where(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
@@ -2431,9 +2274,8 @@ object Citations {
     val offset = lit(new java.math.BigDecimal("1000000000000000000000000"))
       .cast("decimal(38,0)") // 10^24 > any |score| this side of yottascale
     val dec38 = (c: Column) => c.cast("decimal(38,0)")
-    var labels = deg.select(col("id"), col("id").as("label")).pinnedCut
-    var lastCut = labels
-    for (i <- 1 to rounds) {
+    val init = deg.select(col("id"), col("id").as("label")).pinnedCut
+    val labels = Rounds.run("louvain", rounds, init, owned = Seq(init)) { (r, labels) =>
       val sigma = labels.join(deg, Seq("id"))
         .groupBy(col("label").as("c")).agg(sum(col("deg")).as("tot"))
       // the lpa exchange: one repartition on the message key feeds the
@@ -2456,13 +2298,8 @@ object Citations {
           dec38(lit(wTot)) * dec38(col("k")) - dec38(col("deg")) * dec38(col("totx")))
         .withColumn("key",
           concat(lpad((offset - col("score")).cast("string"), 25, "0"), col("c")))
-      val next = scored.groupBy(col("id")).agg(min(col("key")).as("key"))
-        .select(col("id"), expr("substring(key, 26)").as("label"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      graft.Blocks.release(lastCut)
-      lastCut = cut
-      labels = cut
+      r.cut(scored.groupBy(col("id")).agg(min(col("key")).as("key"))
+        .select(col("id"), expr("substring(key, 26)").as("label")))
     }
     (labels, und, deg)
   }
@@ -2610,11 +2447,9 @@ object Citations {
         .collect()(0).getDecimal(0)
       BigInt(wTot) * BigInt(internal) - BigInt(totSq.toBigInteger)
     }
-    var l2 = degW.select(col("id"), col("id").as("label")).pinnedCut
-    var curScore = scoreOf(l2)
-    var lastCut = l2
-    var stalled = false
-    for (_ <- 1 to rounds2 if !stalled) {
+    val init = degW.select(col("id"), col("id").as("label")).pinnedCut
+    val (l2, _) = Rounds.run("louvainMl", rounds2, (init, scoreOf(init)),
+        owned = Seq(init)) { case (r, (l2, curScore)) =>
       val sigma = l2.join(degW, Seq("id"))
         .groupBy(col("label").as("c")).agg(sum(col("deg")).as("tot"))
       val cand = cw.join(l2.hint("shuffle_hash"), cw("u") === l2("id"))
@@ -2642,21 +2477,17 @@ object Citations {
           dec38(lit(wTot)) * dec38(col("k")) - dec38(col("deg")) * dec38(col("totx")))
         .withColumn("key",
           concat(lpad((offset - col("score")).cast("string"), 25, "0"), col("c")))
-      val next = scored.groupBy(col("id")).agg(min(col("key")).as("key"))
-        .select(col("id"), expr("substring(key, 26)").as("label"))
-      val cut = next.localCheckpoint()
+      val cut = r.cut(scored.groupBy(col("id")).agg(min(col("key")).as("key"))
+        .select(col("id"), expr("substring(key, 26)").as("label")))
       val candScore = scoreOf(cut)
-      if (candScore > curScore) {
-        graft.Blocks.release(lastCut)
-        lastCut = cut
-        l2 = cut
-        curScore = candScore
-      } else {
+      if (candScore > curScore) (cut, candScore)
+      else {
         // deterministic sweep: the same candidate would be recomputed
         // and rejected by every remaining round — stop (the twin's
         // remaining unrolled rounds are no-ops by the same rule)
-        graft.Blocks.release(cut)
-        stalled = true
+        r.drop(cut)
+        r.stop()
+        (l2, curScore)
       }
     }
     val out = labels
@@ -2756,7 +2587,7 @@ object Citations {
     * Bounded output (≤|communities| rows); the stats frame is
     * checkpointed before the pinned inputs release. */
   def louvainStats(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val (labels, und, deg) = louvainCore(edges, rounds, noProbe)
+    val (labels, und, deg) = louvainCore(edges, rounds)
     val out = louvainStatsShape(labels, und, deg).localCheckpoint()
     graft.Blocks.release(und)
     graft.Blocks.release(deg)
@@ -2872,30 +2703,38 @@ object Citations {
       .distinct().localCheckpoint()
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    var state = nodes.select(col("id").as("start"),
-        explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
-      .withColumn("cur", col("start"))
-      .localCheckpoint()
-    val visited = scala.collection.mutable.ArrayBuffer(
-      state.select(col("start"), col("wid"), lit(0).as("step"),
-        col("cur").as("node")))
-    val cuts = scala.collection.mutable.ArrayBuffer(state)
-    for (t <- 1 to steps) {
+    // every hop's cut stays live: the path aggregate reads all of them
+    val cuts = scala.collection.mutable.ArrayBuffer(
+      nodes.select(col("id").as("start"),
+          explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
+        .withColumn("cur", col("start"))
+        .localCheckpoint())
+    Rounds.run("randomWalks", steps, cuts.head) { (r, state) =>
       val want = (pmod(col("wid").cast("long") * lit(1000003L)
-        + lit(t.toLong * 7919L)
+        + lit(r.i.toLong * 7919L)
         + col("cur").cast("long") * lit(31L), col("ddeg")) + 1L).as("want")
       val withIdx = state.join(degs, state("cur") === degs("dsrc"))
         .select(col("start"), col("wid"), col("cur"), want)
-      state = withIdx
+      cuts += r.keep(withIdx
         .join(nb.hint("shuffle_hash"),
           withIdx("cur") === nb("src") && withIdx("want") === nb("rank"))
-        .select(col("start"), col("wid"), nb("dst").as("cur"))
-        .localCheckpoint()
-      cuts += state
-      visited += state.select(col("start"), col("wid"), lit(t).as("step"),
-        col("cur").as("node"))
+        .select(col("start"), col("wid"), nb("dst").as("cur")))
+      cuts.last
     }
-    val out = visited.reduce(_ unionByName _)
+    val out = walkPaths(cuts.toSeq)
+    (cuts ++ Seq(nb, degs)).foreach(graft.Blocks.release)
+    out
+  }
+
+  /** One path string per (start, wid) walk from the per-hop walker cuts
+    * (hop t = `hops(t)`, holding start, wid and cur), checkpointed so the
+    * hop cuts can be released before the caller executes it. */
+  private def walkPaths(hops: Seq[DataFrame]): DataFrame =
+    hops.zipWithIndex
+      .map { case (h, t) =>
+        h.select(col("start"), col("wid"), lit(t).as("step"), col("cur").as("node"))
+      }
+      .reduce(_ unionByName _)
       .groupBy(col("start"), col("wid"))
       .agg(max(col("step")).as("n_steps"),
         array_join(expr("transform(sort_array(collect_list(struct(step, node)))," +
@@ -2903,11 +2742,6 @@ object Citations {
       .select(col("start").as("paper_id"), col("wid").as("walk_id"),
         col("n_steps"), col("path"))
       .localCheckpoint()
-    cuts.foreach(graft.Blocks.release)
-    graft.Blocks.release(nb)
-    graft.Blocks.release(degs)
-    out
-  }
 
   /** DuckDB twin of [[randomWalks]] — unrolled hops, same integer mix. */
   def randomWalksSql(walks: Int = 2, steps: Int = 4): String = {
@@ -2992,28 +2826,24 @@ object Citations {
       .pinnedCut
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    // step 1: uniform (no prev) — the randomWalks rule
-    var state = nodes.select(col("id").as("start"),
+    // step 1: uniform (no prev) — the randomWalks rule; every hop's cut
+    // stays live, the path aggregate reads all of them
+    val s0 = nodes.select(col("id").as("start"),
         explode(expr(s"sequence(0, ${walks - 1})")).as("wid"))
       .withColumn("cur", col("start"))
       .localCheckpoint()
-    val visited = scala.collection.mutable.ArrayBuffer(
-      state.select(col("start"), col("wid"), lit(0).as("step"),
-        col("cur").as("node")))
-    val cuts = scala.collection.mutable.ArrayBuffer(state)
     val want1 = (pmod(col("wid").cast("long") * lit(1000003L) + lit(7919L)
       + col("cur").cast("long") * lit(31L), col("ddeg")) + 1L).as("want")
-    val s1 = state.join(degs, state("cur") === degs("dsrc"))
+    val s1 = s0.join(degs, s0("cur") === degs("dsrc"))
       .select(col("start"), col("wid"), col("cur"), want1)
-    state = s1.join(ranked.hint("shuffle_hash"),
-        s1("cur") === ranked("src") && s1("want") === ranked("rank"))
-      .select(col("start"), col("wid"), s1("cur").as("prev"),
-        ranked("dst").as("cur"))
-      .localCheckpoint()
-    cuts += state
-    visited += state.select(col("start"), col("wid"), lit(1).as("step"),
-      col("cur").as("node"))
-    for (t <- 2 to steps) {
+    val cuts = scala.collection.mutable.ArrayBuffer(s0,
+      s1.join(ranked.hint("shuffle_hash"),
+          s1("cur") === ranked("src") && s1("want") === ranked("rank"))
+        .select(col("start"), col("wid"), s1("cur").as("prev"),
+          ranked("dst").as("cur"))
+        .localCheckpoint())
+    Rounds.run("node2vec", steps - 1, cuts.last) { (r, state) =>
+      val t = r.i + 1
       val cands = state.join(nb.hint("shuffle_hash"), state("cur") === nb("src"))
         .select(col("start"), col("wid"), col("prev"), col("cur"),
           nb("dst").as("nxt"))
@@ -3030,25 +2860,14 @@ object Citations {
         .withColumn("r", pmod(col("wid").cast("long") * lit(1000003L)
           + lit(t.toLong * 7919L) + col("cur").cast("long") * lit(31L),
           col("tot")))
-      state = cum
+      cuts += r.keep(cum
         .where(col("r") >= col("cum") - col("wt") && col("r") < col("cum"))
         .select(col("start"), col("wid"), col("cur").as("prev"),
-          col("nxt").as("cur"))
-        .localCheckpoint()
-      cuts += state
-      visited += state.select(col("start"), col("wid"), lit(t).as("step"),
-        col("cur").as("node"))
+          col("nxt").as("cur")))
+      cuts.last
     }
-    val out = visited.reduce(_ unionByName _)
-      .groupBy(col("start"), col("wid"))
-      .agg(max(col("step")).as("n_steps"),
-        array_join(expr("transform(sort_array(collect_list(struct(step, node)))," +
-          " x -> x.node)"), "->").as("path"))
-      .select(col("start").as("paper_id"), col("wid").as("walk_id"),
-        col("n_steps"), col("path"))
-      .localCheckpoint()
-    cuts.foreach(graft.Blocks.release)
-    Seq(nb, adj, degs, ranked).foreach(graft.Blocks.release)
+    val out = walkPaths(cuts.toSeq)
+    (cuts ++ Seq(nb, adj, degs, ranked)).foreach(graft.Blocks.release)
     out
   }
 
@@ -3173,11 +2992,10 @@ object Citations {
     * the same multiplicity. Depth capped at 4 (the reach convention);
     * everything is exact integer arithmetic, so the query hash-oracles
     * with the identically-unrolled twin. */
-  def bfsPaths(edges: DataFrame, hops: Int = 4,
-               roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def bfsPaths(edges: DataFrame, hops: Int = 4): DataFrame = {
     val e = edges.where(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).pinnedCut
-    val out = bfsPathsFrom(e, hops, roundProbe)
+    val out = bfsPathsFrom(e, hops)
     graft.Blocks.release(e)
     out
   }
@@ -3235,11 +3053,13 @@ object Citations {
     val e = edges.where(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).pinnedCut
     val fwd = bfsPathsFrom(e, hops).localCheckpoint()
-    var delta = fwd.where(col("dist") === hops)
+    val deepest = fwd.where(col("dist") === hops)
       .select(col("paper_id").as("id"), lit(0.0).as("delta"))
       .localCheckpoint()
-    var acc = delta
-    for (k <- hops - 1 to 0 by -1) {
+    // levels hops-1 down to 0; every level's δ cut stays live in `acc`
+    val (_, acc) = Rounds.run("betweenness", hops, (deepest, deepest)) {
+        case (r, (delta, acc)) =>
+      val k = hops - r.i
       val lvlK = fwd.where(col("dist") === k)
         .select(col("paper_id").as("id"), col("sigma").as("sv"))
       val lvlK1 = fwd.where(col("dist") === k + 1)
@@ -3251,13 +3071,11 @@ object Citations {
           round((col("sv").cast("double") / col("sw").cast("double")) *
             (lit(1.0) + col("delta")), 12).cast("decimal(28,12)").as("t"))
         .groupBy(col("id")).agg(sum(col("t")).as("s"))
-      val dk = lvlK.select(col("id"), col("sv"))
+      val dk = r.keep(lvlK.select(col("id"), col("sv"))
         .join(terms, Seq("id"), "left_outer")
         .select(col("id"),
-          round(coalesce(col("s").cast("double"), lit(0.0)), 9).as("delta"))
-        .localCheckpoint()
-      delta = dk
-      acc = acc.unionByName(dk)
+          round(coalesce(col("s").cast("double"), lit(0.0)), 9).as("delta")))
+      (dk, acc.unionByName(dk))
     }
     fwd.join(acc.withColumnRenamed("id", "paper_id"), Seq("paper_id"))
       .select(col("paper_id"), col("dist"), col("sigma"), col("delta"))
@@ -3266,27 +3084,19 @@ object Citations {
   /** [[bfsPaths]] over an ALREADY-prepared (deduped, pinned) edge frame —
     * lets [[betweenness]] share one edge checkpoint with its backward
     * pass instead of preparing it twice. */
-  private def bfsPathsFrom(e: DataFrame, hops: Int,
-                           roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  private def bfsPathsFrom(e: DataFrame, hops: Int): DataFrame = {
     val seed = counts(e).orderBy(col("citations").desc, col("paper_id").asc)
       .limit(1).select(col("paper_id").as("id"),
         lit(0).as("dist"), lit(new java.math.BigDecimal(1))
-          .cast("decimal(38,0)").as("sigma"))
-    var reached = seed.localCheckpoint()
-    var frontier = reached
-    for (i <- 1 to hops) {
-      val next = e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
+          .cast("decimal(38,0)").as("sigma")).localCheckpoint()
+    val (reached, _) = Rounds.run("bfsPaths", hops, (seed, seed),
+        owned = Seq(seed)) { case (r, (reached, frontier)) =>
+      val cut = r.cut(e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
         .groupBy(e("dst").as("id"))
         .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))
         .join(reached.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), lit(i).as("dist"), col("sigma"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      val newReached = reached.unionByName(cut).localCheckpoint()
-      graft.Blocks.release(reached)
-      if (i > 1) graft.Blocks.release(frontier)
-      reached = newReached
-      frontier = cut
+        .select(col("id"), lit(r.i).as("dist"), col("sigma")))
+      (r.cut(reached.unionByName(cut)), cut)
     }
     // σ accumulated in DECIMAL(38,0) precisely because path counts grow
     // multiplicatively; the BIGINT output boundary (decimal stringifies
@@ -3347,30 +3157,23 @@ object Citations {
     * float math is the final ≤ nSeeds-row projection (sequential
     * double adds on the 6-dp grid), so the twin hash-matches without
     * decimal accumulation. */
-  def closeness(edges: DataFrame, hops: Int = 4, nSeeds: Int = 8,
-                roundProbe: (Int, DataFrame, () => Long) => Unit = noProbe): DataFrame = {
+  def closeness(edges: DataFrame, hops: Int = 4, nSeeds: Int = 8): DataFrame = {
     val e = edges.where(col("src") =!= col("dst")).distinct()
       .repartition(col("src")).pinnedCut
     val seeds = counts(e)
       .orderBy(col("citations").desc, col("paper_id").asc).limit(nSeeds)
       .select(col("paper_id").as("seed"))
-    var reached = seeds
+    val wave0 = seeds
       .select(col("seed"), col("seed").as("id"), lit(0).as("dist"))
       .localCheckpoint()
-    var frontier = reached
-    for (i <- 1 to hops) {
-      val next = e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
+    val (reached, _) = Rounds.run("closeness", hops, (wave0, wave0),
+        owned = Seq(wave0)) { case (r, (reached, frontier)) =>
+      val cut = r.cut(e.join(frontier.hint("shuffle_hash"), e("src") === frontier("id"))
         .select(col("seed"), e("dst").as("id")).distinct()
         .join(reached.select(col("seed"), col("id")),
           Seq("seed", "id"), "left_anti")
-        .select(col("seed"), col("id"), lit(i).as("dist"))
-      val cut = next.localCheckpoint()
-      roundProbe(i, next, () => cut.count())
-      val newReached = reached.unionByName(cut).localCheckpoint()
-      graft.Blocks.release(reached)
-      if (i > 1) graft.Blocks.release(frontier)
-      reached = newReached
-      frontier = cut
+        .select(col("seed"), col("id"), lit(r.i).as("dist")))
+      (r.cut(reached.unionByName(cut)), cut)
     }
     val ns = (1 to hops).map(d =>
       sum(when(col("dist") === d, 1L).otherwise(0L)).as(s"n$d"))

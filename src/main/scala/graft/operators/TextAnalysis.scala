@@ -301,20 +301,18 @@ object TextAnalysis {
     * convention — the merge literal must fold into the next round's
     * projection) → a pure per-row replace. Checkpoint-per-round with
     * immediate release, the iterative-operator lifecycle. */
-  private[graft] def bpeMergeList(words: DataFrame, rounds: Int,
-                                  roundProbe: (Int, DataFrame, () => Long) => Unit = (_, _, _) => ())
+  private[graft] def bpeMergeList(words: DataFrame, rounds: Int)
       : Seq[(Int, String, String, Long)] = {
     val spark = words.sparkSession
     import spark.implicits._
-    var vocab = words
+    val init = words
       .select(expr(
         """array_join(transform(sequence(1, length(w)), i ->
           |  concat('{', substring(w, i, 1), '}')), '')""".stripMargin).as("rep"),
         col("freq"))
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var done = false
-    for (r <- 1 to rounds if !done) {
+    val vocab = graft.Rounds.run("bpeMerges", rounds, init, owned = Seq(init)) { (r, vocab) =>
       val bestFrame = vocab
         .select(col("freq"), expr(
           """transform(filter(split(rep, '\\}'), x -> x != ''),
@@ -328,22 +326,19 @@ object TextAnalysis {
         .agg(sum(col("freq")).as("wt"))
         .orderBy(col("wt").desc, col("a"), col("b"))
         .limit(1)
-      roundProbe(r, bestFrame, () => 1L) // the argmax frame is ≤1 row by construction
+      r.show(bestFrame, () => 1L) // the argmax frame is ≤1 row by construction
       val best = bestFrame.as[(String, String, Long)].collect()
-      if (best.isEmpty) done = true
+      if (best.isEmpty) { r.stop(); vocab }
       else {
         val (a, b, wt) = best.head
         // the {sym} anchoring (and the embedded replace literal) requires
         // delimiter-free, quote-free symbols; corpus tokens are plain words
         require(!(a + b).exists(c => c == '{' || c == '}' || c == '\''),
           s"corpus token contains a delimiter/quote: '$a' '$b'")
-        merges += ((r, a, b, wt))
-        val next = vocab
+        merges += ((r.i, a, b, wt))
+        r.cut(vocab
           .select(expr(s"replace(rep, '{$a}{$b}', '{$a$b}')").as("rep"),
-            col("freq"))
-          .localCheckpoint()
-        graft.Blocks.release(vocab)
-        vocab = next
+            col("freq")))
       }
     }
     graft.Blocks.release(vocab)

@@ -215,4 +215,33 @@ class CitationsSpec extends AnyFunSuite {
     assert(a === b)
     assert(a("120C") === 1L)
   }
+
+  test("probeSide honors the broadcast threshold's sign and unit") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    val side = Seq(("a", 1.0)).toDF("id", "share")
+    def strategy(threshold: Option[String], rows: Long): String = {
+      threshold match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      val plan = Citations.probeSide(side, rows).queryExecution.analyzed.toString
+      if (plan.contains("strategy=broadcast")) "broadcast"
+      else if (plan.contains("strategy=shuffle_hash")) "shuffle_hash"
+      else fail(s"no join hint in:\n$plan")
+    }
+    try {
+      // -1 disables broadcast: never broadcast, however small the side
+      assert(strategy(Some("-1"), 1L) === "shuffle_hash")
+      // 10MB is 10 MiB, not 10 bytes: 1k rows x 64 B fit, 1M rows do not
+      assert(strategy(Some("10MB"), 1000L) === "broadcast")
+      assert(strategy(Some("10MB"), 1000000L) === "shuffle_hash")
+      // the session default (10 MiB) reads the same way
+      assert(strategy(None, 1000L) === "broadcast")
+      assert(strategy(None, 1000000L) === "shuffle_hash")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -10,8 +10,8 @@ import graft.operators.Citations
   * with a `LogicalRDD`, so the blanket audit sees only the final
   * projection over an opaque RDD scan, never the join/aggregate shape a
   * round actually executes (PLANS.md concedes this for every fixpoint).
-  * The operators expose a `roundProbe` hook that fires on each round's
-  * un-cut `next` frame before the checkpoint; this spec injects a probe,
+  * Every operator loop runs through [[Rounds]], whose observer sees each
+  * round's un-cut frame; this spec observes one operator's loop,
   * captures the executed plan of ROUND 1 (whose inputs are all
   * checkpointed scans, so the plan contains exactly one round's
   * operators), and pins the shape:
@@ -31,7 +31,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   val sf = "/root/testdata/sf0.001"
 
-  private def capture(run: ((Int, DataFrame, () => Long) => Unit) => DataFrame): Map[Int, String] = {
+  private def capture(op: String)(run: => DataFrame): Map[Int, String] = {
     val plans = scala.collection.mutable.Map[Int, String]()
     // sparkPlan is the STATIC physical plan — stable whether or not the
     // operator's own checkpoint has already executed the round (the
@@ -39,9 +39,10 @@ class IterativePlanSpec extends AnyFunSuite {
     // AQE sections and double-count every join). Rounds 1 and 2 are
     // captured — round 1's inputs are the initial checkpointed scans,
     // round 2's carry the previous round's scalar folds. The count thunk
-    // is never invoked: plan capture must stay job-free.
-    run((i, df, _) =>
-      if (i <= 2) plans(i) = df.queryExecution.sparkPlan.toString)
+    // is never invoked: plan capture must stay job-free. Only `op`'s own
+    // loop is captured (sccLayers runs the sccAll and sccPivot loops first).
+    Rounds.observe((o, i, df, _) =>
+      if (o == op && i <= 2) plans(i) = df.queryExecution.sparkPlan.toString)(run)
     plans.toMap
   }
 
@@ -58,7 +59,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("pageRank round: 2 equi-joins + 1 dangling-mass fold, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.pageRank(e, iterations = 2, roundProbe = p))
+    val plans = capture("pageRank")(Citations.pageRank(e, iterations = 2))
     val plan = plans(1)
     auditCommon("pageRank", plan)
     // contribs (edges ⋈ ranks) + carrier re-instatement (nodesWithDeg
@@ -69,7 +70,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("kCore round: 1 degree aggregate + 2 semi-joins, no scalar folds") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.kCore(e, roundProbe = p))
+    val plans = capture("kCore")(Citations.kCore(e))
     val plan = plans(1)
     auditCommon("kCore", plan)
     assert(equiJoins(plan) === 2, s"kCore round joins changed:\n$plan")
@@ -79,7 +80,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("hits half-step: ONE message join + aggregate, norm fold only — sparse shape") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.hits(e, iterations = 2, roundProbe = p))
+    val plans = capture("hits")(Citations.hits(e, iterations = 2))
     // the probe fires on the authority half-step's un-cut araw frame; the
     // hub half-step is operation-identical on the transposed edge pin.
     // Round 1 reads the dense all-1 init: message join + aggregate, no
@@ -100,8 +101,8 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("personalized pagerank round: the pageRank shape — 2 equi-joins + 1 dangling fold") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p =>
-      Citations.personalizedPageRank(e, iterations = 2, roundProbe = p))
+    val plans = capture("personalizedPageRank")(
+      Citations.personalizedPageRank(e, iterations = 2))
     val plan = plans(1)
     auditCommon("personalizedPageRank", plan)
     assert(equiJoins(plan) === 2, s"ppr round joins changed:\n$plan")
@@ -110,7 +111,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("components round: message join + zip join carrying the chg flag, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.components(e, roundProbe = p))
+    val plans = capture("components")(Citations.components(e))
     for (r <- Seq(1, 2)) {
       auditCommon("components", plans(r))
       // min-message join (und ⋈ labels, hash-building the node-scale
@@ -142,9 +143,10 @@ class IterativePlanSpec extends AnyFunSuite {
       .where(length(col("w")).between(1, 32))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
     val plans = scala.collection.mutable.Map[Int, String]()
-    graft.operators.TextAnalysis.bpeMergeList(words, rounds = 2,
-      roundProbe = (r, df, _) =>
-        if (r <= 2) plans(r) = df.queryExecution.executedPlan.toString)
+    Rounds.observe((_, r, df, _) =>
+        if (r <= 2) plans(r) = df.queryExecution.executedPlan.toString) {
+      graft.operators.TextAnalysis.bpeMergeList(words, rounds = 2)
+    }
     Seq(1, 2).foreach { r =>
       val plan = plans(r)
       auditCommon(s"bpeMerges round $r", plan)
@@ -161,7 +163,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("lpa round: message join + label zip, ONE repartition feeding both plurality aggregates") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.lpa(e, rounds = 2, roundProbe = p))
+    val plans = capture("lpa")(Citations.lpa(e, rounds = 2))
     for (r <- Seq(1, 2)) {
       val plan = plans(r)
       auditCommon("lpa", plan)
@@ -189,7 +191,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("louvain round: message join + 3 side-frame zips + sigma build, no cartesians") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.louvain(e, rounds = 2, roundProbe = p))
+    val plans = capture("louvain")(Citations.louvain(e, rounds = 2))
     for (r <- Seq(1, 2)) {
       val plan = plans(r)
       auditCommon("louvain", plan)
@@ -207,7 +209,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("bfs hop: frontier join + sigma aggregate + reached anti-join, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.bfsPaths(e, roundProbe = p))
+    val plans = capture("bfsPaths")(Citations.bfsPaths(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("bfsPaths", plan)
@@ -221,7 +223,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("closeness wave: frontier join + distinct + reached anti-join, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.closeness(e, roundProbe = p))
+    val plans = capture("closeness")(Citations.closeness(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("closeness", plan)
@@ -235,7 +237,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("scc closure round: frontier join + distinct + visited anti-join, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.sccPivot(e, roundProbe = p))
+    val plans = capture("sccPivot")(Citations.sccPivot(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("sccPivot", plan)
@@ -254,7 +256,7 @@ class IterativePlanSpec extends AnyFunSuite {
 
   test("sccLayers round: candidate join + max + level left-outer, nothing else") {
     val e = Citations.edges(spark, sf)
-    val plans = capture(p => Citations.sccLayers(e, roundProbe = p))
+    val plans = capture("sccLayers")(Citations.sccLayers(e))
     for (r <- plans.keys.toSeq.sorted.take(2)) {
       val plan = plans(r)
       auditCommon("sccLayers", plan)

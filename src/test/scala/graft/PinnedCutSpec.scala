@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Row, SQLContext}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the cut must (a) keep the hash partitioning visible downstream,
   * (b) derive its partition count from real leaf bytes / target with
   * the floor clamp, (c) remove the downstream exchange on the pinned
-  * key, (d) be a plain AQE checkpoint under `spark.graft.cut.pin=false`,
-  * and (e) never change results. */
+  * key, (d) fall back to `shuffle.partitions`, never the floor, when no
+  * leaf size is known, (e) read its byte confs with units, and (f) never
+  * change results. */
 class PinnedCutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -66,19 +71,6 @@ class PinnedCutSpec extends AnyFunSuite {
     Blocks.release(cut)
   }
 
-  test("spark.graft.cut.pin=false degrades to a plain AQE checkpoint") {
-    withConf("spark.graft.cut.pin" -> "false") {
-      val cut = Blocks.pinnedCut(src.repartition(col("k")))
-      cut.queryExecution.analyzed match {
-        case l: LogicalRDD =>
-          assert(!l.outputPartitioning.isInstanceOf[HashPartitioning],
-            s"pin=false must not pin, got ${l.outputPartitioning}")
-        case other => fail(s"not a LogicalRDD: $other")
-      }
-      Blocks.release(cut)
-    }
-  }
-
   test("pinned and plain cuts produce identical rows") {
     val a = Blocks.pinnedCut(src.repartition(col("k")))
       .groupBy(col("k")).agg(sum(col("v")).as("s"))
@@ -104,8 +96,40 @@ class PinnedCutSpec extends AnyFunSuite {
     while (spark.sparkContext.getRDDStorageInfo
              .exists(i => i.id == rddId && i.memSize + i.diskSize > 0) &&
            System.nanoTime() < deadline) Thread.sleep(50)
-    val n = Blocks.cutPartitions(cp.repartition(col("k")))
-    assert(n == spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      s"expected fallback to session shuffle partitions, got $n")
+    // shuffle.partitions off the floor (4), so a floor landing shows
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val n = Blocks.cutPartitions(cp.repartition(col("k")))
+      assert(n == 7, s"expected fallback to session shuffle partitions, got $n")
+    }
+  }
+
+  test("an unknown-size relation leaf falls back to the session shuffle partitions") {
+    // a non-file relation (JDBC-style) reports defaultSizeInBytes: no idea
+    val rel = new BaseRelation with TableScan {
+      val sqlContext: SQLContext = spark.sqlContext
+      val schema: StructType = StructType(Seq(StructField("k", StringType)))
+      def buildScan(): RDD[Row] = spark.sparkContext.parallelize(Seq(Row("a")))
+    }
+    assert(rel.sizeInBytes == Long.MaxValue)
+    withConf("spark.sql.shuffle.partitions" -> "7") {
+      val n = Blocks.cutPartitions(spark.baseRelationToDataFrame(rel)
+        .repartition(col("k")))
+      assert(n == 7, s"an unknown size must not clamp to the 262144 cap, got $n")
+    }
+  }
+
+  test("byte confs are read with units and never throw") {
+    val df = src.repartition(col("k"))
+    // "1k" is 1024 bytes: the same width as the plain-digits spelling
+    val plain = withConf("spark.graft.cut.partitionBytes" -> "1024")(Blocks.cutPartitions(df))
+    val unit = withConf("spark.graft.cut.partitionBytes" -> "1k")(Blocks.cutPartitions(df))
+    assert(plain > 4 && unit == plain, s"1024 -> $plain, 1k -> $unit")
+    // 64m parses (the old digit parse threw on the suffix) and this tiny
+    // frame lands on the floor under it
+    assert(withConf("spark.graft.cut.partitionBytes" -> "64m")(Blocks.cutPartitions(df)) == 4)
+    // malformed values fall back to the defaults instead of failing the cut
+    assert(withConf("spark.graft.cut.partitionBytes" -> "lots",
+      "spark.graft.cut.minPartitions" -> "few")(Blocks.cutPartitions(df)) == 4)
+    assert(Blocks.bytesConf(spark, "spark.graft.no.such.key", 5L) == 5L)
   }
 }
